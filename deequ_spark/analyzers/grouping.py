@@ -2,7 +2,9 @@
 
 All analyzers over the same (grouping columns, filter) pair share ONE
 ``GROUP BY`` frequency table (state ``FrequenciesAndNumRows``); the runner
-fuses their second-stage aggregations into one ``agg`` over it.
+fuses their second-stage aggregations into one ``agg`` over it, and a
+plain Histogram on the same column and filter reads a view of the same
+table (``frequencies_plan_all``), so the corpus is grouped once.
 
 Reference parity (semantics only):
 /root/reference/src/main/scala/com/amazon/deequ/analyzers/
@@ -82,43 +84,28 @@ class FrequenciesAndNumRows(State):
 def frequencies_plan(data: DataFrame, grouping_columns: Sequence[str],
                      where: Optional[str] = None) -> DataFrame:
     """Lazy plan for SELECT cols, COUNT(*) FROM data WHERE any col NOT NULL
-    [AND where] GROUP BY cols  (parity: GroupingAnalyzers.scala:64-109)."""
-    columns = list(grouping_columns) if grouping_columns else list(data.columns)
-    if not columns:
-        raise ValueError("no grouping columns and DataFrame has no columns")
-
-    at_least_one = None
-    for name in columns:
-        c = _col(name).isNotNull()
-        at_least_one = c if at_least_one is None else (at_least_one | c)
-
-    # filter BEFORE projecting: the where may reference non-grouping
-    # columns (Catalyst pushes the filter into the scan either way)
-    filtered = data.filter(where) if where is not None else data
-    projected = filtered.select(*[_col(c) for c in columns]).where(at_least_one)
-
-    return (projected
-            .groupBy(*[_col(c) for c in columns])
-            .agg(F.count(F.lit(1)).alias(COUNT_COL)))
+    [AND where] GROUP BY cols  (parity: GroupingAnalyzers.scala:64-109).
+    Catalyst pushes the not-null filter on the grouping keys below the
+    Aggregate, so this plans exactly like a pre-shuffle exclusion."""
+    columns = list(grouping_columns) or list(data.columns)
+    return exclude_all_null_groups(
+        frequencies_plan_all(data, columns, where), columns)
 
 
 def frequencies_plan_all(data: DataFrame, grouping_columns: Sequence[str],
                          where: Optional[str] = None) -> DataFrame:
-    """Null-INCLUSIVE variant of :func:`frequencies_plan` — the same
-    GROUP BY without the at-least-one-key-not-null filter. The standard
-    table is EXACTLY this table minus the all-null-key group (groupBy
-    partitions rows by key, so excluding the all-null group post-shuffle
-    equals excluding all-null rows pre-shuffle) — see
-    :func:`exclude_all_null_groups`. Lets one corpus shuffle serve both
-    a grouping bucket and a same-column standalone Histogram (r13,
-    guide §2.4 "two operations keyed the same way share one
-    exchange")."""
-    columns = list(grouping_columns) if grouping_columns else list(data.columns)
+    """Null-INCLUSIVE frequency table: the GROUP BY without the
+    at-least-one-key-not-null filter. :func:`frequencies_plan` is this
+    table minus the all-null-key group (:func:`exclude_all_null_groups`),
+    which lets one corpus GROUP BY serve grouping analyzers and a
+    Histogram on the same column."""
+    columns = list(grouping_columns) or list(data.columns)
     if not columns:
         raise ValueError("no grouping columns and DataFrame has no columns")
+    # filter BEFORE projecting: the where may reference non-grouping
+    # columns (Catalyst pushes the filter into the scan either way)
     filtered = data.filter(where) if where is not None else data
-    projected = filtered.select(*[_col(c) for c in columns])
-    return (projected
+    return (filtered.select(*[_col(c) for c in columns])
             .groupBy(*[_col(c) for c in columns])
             .agg(F.count(F.lit(1)).alias(COUNT_COL)))
 

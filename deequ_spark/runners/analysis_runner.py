@@ -9,10 +9,17 @@ repository), :389-416 (column pruning before agg).
 Execution contract (the engine's scale story):
   * N scan-shareable analyzers  → exactly ONE ``df.agg(...)`` job = one
     pass over the data, regardless of N.
-  * M grouping analyzers over the same (columns, filter) → ONE shuffle
-    (the GROUP BY) + one fused second-stage agg (single action here,
-    vs two jobs in the reference, since num_rows is recovered as
-    SUM(absolute) inside the same aggregation).
+  * One planner for every grouping consumer: grouping analyzers and plain
+    Histograms are grouped by the frequency table they read, so each
+    (columns, where) table costs ONE corpus GROUP BY however many
+    consumers read it. The grouping analyzers' second stages fuse into a
+    single action (num_rows is recovered as SUM(absolute) in the same
+    aggregation, vs two jobs in the reference); each Histogram reads a
+    view of the same table. A table is persisted only when more than one
+    job reads it, and released afterwards.
+  * One fallback: if the shared work on a table fails, each of its
+    consumers recomputes on its own (``compute_state_from`` +
+    ``compute_metric_from_state``).
   * Column pruning: the fused scan selects only referenced columns so
     parquet/DSv2 scans read a narrow projection.
 """
@@ -124,7 +131,7 @@ def _run_task_groups(data: DataFrame, tasks: List[Any]) -> AnalyzerContext:
     """Execute the runner's independent per-group actions, overlapped.
 
     Each task is one self-contained Spark action chain over a disjoint
-    analyzer set (fused scan / KLL pass / one grouping bucket / one
+    analyzer set (fused scan / KLL pass / one frequency table / one
     standalone analyzer). With ≥2 tasks they are submitted from a small
     thread pool so one group's tasks back-fill executors idled by
     another group's straggler tail (guide §2.6 — actions are only
@@ -194,11 +201,12 @@ def do_analysis_run(data: DataFrame,
     scanned once with the usual fusion, its states are merged with the
     prior ones, and metrics come from the merged states — the incremental
     pattern (IncrementalAnalysisTest.scala:30-105). ``save_states_with``
-    then persists the MERGED states, so consecutive deltas chain. When
-    both point at the SAME FileSystemStateProvider path, construct it
-    with ``allow_overwrite=True`` — the merged write replaces the prior
-    state file, and the default (HdfsStateProvider parity) refuses
-    overwrites.
+    then persists the MERGED states, so consecutive deltas chain. Both
+    may be ONE FileSystemStateProvider constructed with
+    ``allow_overwrite=True`` (the default, HdfsStateProvider parity,
+    refuses overwrites): each metric is computed while the prior state
+    is still readable, and the merged state is written beside it and
+    swapped in only once complete.
 
     ``keep_state_cache=True`` (r12 perf) leaves DataFrame-valued states
     (grouping frequency tables) CACHED when they are saved into
@@ -267,68 +275,31 @@ def do_analysis_run(data: DataFrame,
     others = [a for a in passed
               if a not in scanning and a not in grouping and a not in klls]
 
-    # 4-6. the execution groups below — the fused scan, the shared KLL
-    # Arrow pass, each grouping bucket, and each standalone analyzer —
-    # are INDEPENDENT Spark actions over the same immutable input, yet
-    # they used to run strictly one after another, so every group's
-    # straggler tail left the cluster idle (guide §2.6 "overlap
-    # independent jobs": actions are only sequential because driver
-    # code calls them sequentially). They are built as task closures
-    # and submitted from a small thread pool; each task touches a
-    # DISJOINT set of analyzers and returns its own AnalyzerContext,
-    # and the contexts merge in submission order, so the resulting
-    # metric map (values AND iteration order) is identical to the
-    # sequential run. `spark.deequ.runner.maxConcurrentGroups` bounds
-    # the in-flight actions (guide: 2-3 in flight is plenty — enough to
-    # back-fill a tail, not enough to fight for executors); 1 restores
-    # fully sequential submission.
-    buckets: Dict[Tuple, List[FrequencyBasedAnalyzer]] = {}
+    # 4. plan the frequency tables: grouping analyzers by (columns,
+    # where) — first, so tables keep the reference's bucket order — then
+    # every plain Histogram onto the table of its (column, where). A
+    # float/double (or unresolved) column gets a table of its own:
+    # groupBy normalizes -0.0→0.0 and NaN bit patterns BEFORE any cast,
+    # the Histogram's string-cast groupBy does not. A Histogram with a
+    # binning UDF or sum_column groups another expression and runs
+    # standalone; so does every Histogram under a state provider, which
+    # keeps a bucket's saved state the very frame it cached (the frame
+    # keep_state_cache hands to the caller).
+    dtypes = {f.name: f.dataType.typeName() for f in schema.fields}
+    tables: Dict[Tuple, List[Analyzer]] = {}
     for a in grouping:
-        key = (tuple(sorted(a.grouping_columns)), getattr(a, "where", None))
-        buckets.setdefault(key, []).append(a)
-
-    # r13 (guide §2.4 "two operations keyed the same way can share one
-    # exchange"): a standalone Histogram whose (column, where) matches a
-    # grouping bucket rides THAT bucket's shuffle instead of running its
-    # own corpus-wide groupBy. The shared table is the null-INCLUSIVE
-    # raw groupBy: the bucket's view is it minus the all-null-key group
-    # (exactly frequencies_plan's pre-shuffle exclusion) and the
-    # Histogram's view is a post-shuffle string-cast re-aggregation of
-    # it (cast is per-value deterministic, so regrouping the tiny
-    # frequency table by cast(key) sums to exactly the corpus-level
-    # counts). Guards: no binning/sum_column (those change the grouped
-    # expression), no float/double column (groupBy normalizes -0.0→0.0
-    # and NaN bit patterns BEFORE the cast, a corpus-level string
-    # groupBy would not), plain unquoted column name, and no state
-    # provider (the saved bucket state must keep its standalone cache
-    # lifecycle). Identical values either way — only one Exchange
-    # where two ran.
-    shared_hists: Dict[Tuple, List[Histogram]] = {}
-    others_canonical = list(others)
-    share = True
-    try:
-        share = str(data.sparkSession.conf.get(
-            "spark.deequ.runner.shareHistogramShuffle", "true")).lower() \
-            == "true"
-    except Exception:  # noqa: BLE001 — conf unreadable → default on
-        pass
-    if share and buckets and save_states_with is None:
-        schema_by_name = {f.name: f.dataType for f in schema.fields}
-        remaining = []
-        for a in others:
-            key = None
-            if (type(a) is Histogram and a.binning_udf is None
-                    and a.sum_column is None
-                    and a.column == a._plain_column
-                    and a.column in schema_by_name
-                    and schema_by_name[a.column].typeName()
-                    not in ("float", "double")):
-                key = ((a.column,), a.where)
-            if key is not None and key in buckets:
-                shared_hists.setdefault(key, []).append(a)
-            else:
-                remaining.append(a)
-        others = remaining
+        key = (tuple(sorted(a.grouping_columns)),
+               getattr(a, "where", None), False)
+        tables.setdefault(key, []).append(a)
+    standalone: List[Analyzer] = []
+    for a in others:
+        if (type(a) is Histogram and a.binning_udf is None
+                and a.sum_column is None and save_states_with is None):
+            own_table = dtypes.get(a.column) in (None, "float", "double")
+            tables.setdefault(((a.column,), a.where, own_table),
+                              []).append(a)
+        else:
+            standalone.append(a)
 
     def run_klls() -> AnalyzerContext:
         # ONE extra Arrow pass for ALL KLL columns combined
@@ -346,21 +317,12 @@ def do_analysis_run(data: DataFrame,
                 ctx.metric_map[a] = a.to_failure_metric(exc)
         return ctx
 
-    def run_standalone(a: Analyzer) -> AnalyzerContext:
-        # standalone execution (Histogram, HistogramBinned, CustomSql…)
-        ctx = AnalyzerContext()
-        try:
-            state = a.compute_state_from(data)
-            if save_states_with is not None and state is not None:
-                save_states_with.persist(a, state)
-            ctx.metric_map[a] = a.compute_metric_from_state(state)
-        except Exception as exc:  # noqa: BLE001
-            ctx.metric_map[a] = a.to_failure_metric(exc)
-        return ctx
-
-    # state providers make no thread-safety promise, so concurrent tasks
-    # persist through one lock (disjoint analyzer keys, shared provider
-    # internals — e.g. one backing dict or filesystem directory)
+    # 5. the fused scan, the shared KLL Arrow pass, each frequency table
+    # and each standalone analyzer are INDEPENDENT Spark actions over the
+    # same immutable input; they run from a small thread pool
+    # (_run_task_groups), each task over a DISJOINT set of analyzers.
+    # State providers make no thread-safety promise, so concurrent tasks
+    # persist through one lock.
     if save_states_with is not None:
         save_states_with = _LockingStateProvider(save_states_with)
 
@@ -370,38 +332,25 @@ def do_analysis_run(data: DataFrame,
             data, scanning, save_states_with))
     if klls:
         tasks.append(run_klls)
-    for (cols_key, where), bucket in buckets.items():
-        hists = shared_hists.get((cols_key, where), [])
-        tasks.append(lambda b=bucket, w=where, h=hists:
-                     _run_grouping_analyzers(
-                         data, list(b[0].grouping_columns), w, b,
-                         save_states_with, keep_state_cache=keep_state_cache,
-                         shared_histograms=h))
-    for a in others:
-        tasks.append(lambda a=a: run_standalone(a))
-
+    for consumers in tables.values():
+        tasks.append(lambda c=consumers: _run_frequency_table(
+            data, c, save_states_with, keep_state_cache))
+    for a in standalone:
+        tasks.append(lambda a=a: AnalyzerContext(
+            {a: _standalone_metric(data, a, save_states_with)}))
     task_results = _run_task_groups(data, tasks)
-    if shared_hists:
-        # histogram metrics were computed inside a bucket's task — put
-        # the merged map back in the exact order the unshared run
-        # produces (scan, KLL, buckets, standalones), so downstream
-        # metric rendering is byte-identical
-        canonical = list(scanning) + list(klls)
-        for b in buckets.values():
-            # a bucket task's map order is shareable-then-non-shareable
-            canonical += [a for a in b if isinstance(
-                a, ScanShareableFrequencyBasedAnalyzer)]
-            canonical += [a for a in b if not isinstance(
-                a, ScanShareableFrequencyBasedAnalyzer)]
-        canonical += others_canonical
-        ordered = AnalyzerContext()
-        for a in canonical:
-            if a in task_results.metric_map:
-                ordered.metric_map[a] = task_results.metric_map[a]
-        for a, m in task_results.metric_map.items():
-            ordered.metric_map.setdefault(a, m)
-        task_results = ordered
-    results += task_results
+
+    # 6. emit in the canonical order — scan, KLL, each bucket's
+    # shareable then non-shareable analyzers, then every other analyzer
+    # as given — whichever task computed a metric
+    order = scanning + klls
+    for consumers in tables.values():
+        order += sorted([a for a in consumers
+                         if not isinstance(a, Histogram)],
+                        key=lambda a: not isinstance(
+                            a, ScanShareableFrequencyBasedAnalyzer))
+    for a in order + others:
+        results.metric_map[a] = task_results.metric_map[a]
 
     # 7. store newly computed metrics ONLY under an explicit save key
     if metrics_repository is not None and save_or_append_results_with_key is not None:
@@ -461,13 +410,8 @@ def _run_scanning_analyzers(data: DataFrame,
         # lazily at agg time) must not poison the whole fused pass —
         # isolate by running each analyzer alone
         for a in runnable:
-            try:
-                state = a.compute_state_from(pruned)
-                if save_states_with is not None and state is not None:
-                    save_states_with.persist(a, state)
-                ctx.metric_map[a] = a.compute_metric_from_state(state)
-            except Exception as exc:  # noqa: BLE001
-                ctx.metric_map[a] = a.to_failure_metric(exc)
+            ctx.metric_map[a] = _standalone_metric(pruned, a,
+                                                   save_states_with)
         return ctx
     for a, offset in zip(runnable, offsets):
         try:
@@ -480,140 +424,119 @@ def _run_scanning_analyzers(data: DataFrame,
     return ctx
 
 
-def _run_grouping_analyzers(data: DataFrame,
-                            grouping_columns: List[str],
-                            where: Optional[str],
-                            analyzers: List[FrequencyBasedAnalyzer],
-                            save_states_with=None,
-                            keep_state_cache: bool = False,
-                            shared_histograms: Optional[List[Histogram]]
-                            = None) -> AnalyzerContext:
-    """One shuffle for the whole bucket; fused second stage
-    (AnalysisRunner.scala:560-628).
+def _standalone_metric(data: DataFrame, a: Analyzer,
+                       save_states_with=None) -> Metric:
+    """One analyzer on its own: its state, saved if asked, then its
+    metric. Any error becomes its Failure metric. This is the runner's
+    one fallback as well as the standalone path."""
+    try:
+        state = a.compute_state_from(data)
+        if save_states_with is not None and state is not None:
+            save_states_with.persist(a, state)
+        return a.compute_metric_from_state(state)
+    except Exception as exc:  # noqa: BLE001
+        return a.to_failure_metric(exc)
 
-    ``shared_histograms`` (r13, guide §2.4): standalone Histograms on
-    the bucket's single column/filter that would otherwise pay their own
-    corpus shuffle. The bucket then groups WITHOUT the null-key
-    exclusion (persisted once); the bucket's analyzers read the
-    all-null-group-excluded view (value-identical to frequencies_plan)
-    and each histogram reads a post-shuffle string-cast re-aggregation
-    of the same table (value-identical to its own corpus groupBy — cast
-    is per-value deterministic, so group sums equal corpus counts)."""
+
+def _frequency_table(data: DataFrame, bucket: List[FrequencyBasedAnalyzer],
+                     hists: List[Histogram]) -> DataFrame:
+    """The one corpus GROUP BY a table's consumers share.
+
+    Grouping analyzers alone read :func:`frequencies_plan`. With
+    Histograms beside them the table is the null-INCLUSIVE raw GROUP BY:
+    the grouping analyzers read it minus the all-null-key group, each
+    Histogram its string-cast re-aggregation (:func:`_histogram_view`).
+    Histograms alone read their own string-cast table."""
+    if not bucket:
+        return hists[0].compute_state_from(data).frequencies
+    plan = frequencies_plan_all if hists else frequencies_plan
+    return plan(data, bucket[0].grouping_columns,
+                getattr(bucket[0], "where", None))
+
+
+def _histogram_view(raw: DataFrame, h: Histogram) -> DataFrame:
+    """``h``'s table from a raw frequency table on its column:
+    coalesce(cast(key AS string), NullValue), regrouped, counts summed —
+    a post-shuffle exchange over distinct values, not a corpus pass. The
+    cast is per-value deterministic, so the sums equal the counts of a
+    corpus-level string-cast GROUP BY."""
+    plain = h._plain_column
+    return (raw.select(F.coalesce(F.col(f"`{plain}`").cast("string"),
+                                  F.lit(NULL_FIELD_REPLACEMENT)).alias(plain),
+                       F.col(COUNT_COL))
+            .groupBy(F.col(f"`{plain}`"))
+            .agg(F.sum(COUNT_COL).cast("long").alias(COUNT_COL)))
+
+
+def _run_frequency_table(data: DataFrame, consumers: List[Analyzer],
+                         save_states_with=None,
+                         keep_state_cache: bool = False) -> AnalyzerContext:
+    """Every consumer of one frequency table: one corpus GROUP BY, the
+    grouping analyzers' fused second stage (AnalysisRunner.scala:560-628)
+    and each Histogram's two jobs all read it."""
     ctx = AnalyzerContext()
-    hists = list(shared_histograms or [])
-    freq_incl = None
-    try:
-        if hists:
-            freq_incl = frequencies_plan_all(data, grouping_columns, where)
-            frequencies = exclude_all_null_groups(freq_incl,
-                                                  grouping_columns)
-        else:
-            frequencies = frequencies_plan(data, grouping_columns, where)
-    except Exception as exc:  # noqa: BLE001  (e.g. invalid `where` SQL)
-        for a in analyzers + hists:
-            ctx.metric_map[a] = a.to_failure_metric(exc)
-        return ctx
-
-    shareable = [a for a in analyzers
-                 if isinstance(a, ScanShareableFrequencyBasedAnalyzer)]
-    non_shareable = [a for a in analyzers if a not in shareable]
-
-    # persist the (small, post-shuffle) frequency table only when >1 action
-    # will consume it (parity :576-578, 626). With shared histograms the
-    # CACHED frame is the null-inclusive table — the bucket view and every
-    # histogram view are cheap post-shuffle derivations of it.
-    needs_persist = bool(non_shareable) or (save_states_with is not None) \
-        or bool(hists)
-    cached = None
-    if needs_persist:
-        cached = (freq_incl if freq_incl is not None else frequencies) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        if freq_incl is not None:
-            freq_incl = cached
-            frequencies = exclude_all_null_groups(freq_incl,
-                                                  grouping_columns)
-        else:
-            frequencies = cached
-
-    def _histogram_metrics() -> None:
-        """Derive each shared histogram's table from the cached
-        null-inclusive frequencies: coalesce(cast(key AS string),
-        NullValue), regroup, sum counts — a tiny post-shuffle exchange
-        over distinct values, not a corpus pass."""
-        for h in hists:
-            try:
-                plain = h._plain_column
-                key = F.col(f"`{plain}`")
-                derived = (freq_incl.select(
-                    F.coalesce(key.cast("string"),
-                               F.lit(NULL_FIELD_REPLACEMENT)).alias(plain),
-                    F.col(COUNT_COL))
-                    .groupBy(F.col(f"`{plain}`"))
-                    .agg(F.sum(COUNT_COL).cast("long").alias(COUNT_COL)))
-                ctx.metric_map[h] = h.compute_metric_from_state(
-                    FrequenciesAndNumRows(derived))
-            except Exception as exc:  # noqa: BLE001
-                ctx.metric_map[h] = h.to_failure_metric(exc)
-
-    # fused second stage: SUM(absolute) at offset 0 recovers num_rows in the
-    # SAME action as every analyzer's aggregates
+    hists = [a for a in consumers if isinstance(a, Histogram)]
+    bucket = [a for a in consumers if not isinstance(a, Histogram)]
+    # fused second stage: SUM(absolute) at offset 0 recovers num_rows in
+    # the SAME action as every analyzer's aggregates
     aggregations = [F.sum(F.col(COUNT_COL)).cast("long")]
-    offsets: List[int] = []
-    current = 1
-    for a in shareable:
-        try:
-            aggs = a.aggregation_functions()
-        except Exception as exc:  # noqa: BLE001
-            # Parity AnalysisTest.scala:398-427: failure while building the
-            # fused second stage fails every analyzer sharing the GROUP BY
-            for other in analyzers:
-                ctx.metric_map[other] = other.to_failure_metric(exc)
-            # shared histograms do not share the second stage: compute
-            # them from the (still valid) inclusive table, as standalone
-            # execution would have succeeded
-            _histogram_metrics()
-            if cached is not None:
-                cached.unpersist()
-            return ctx
-        aggregations.extend(aggs)
-        offsets.append(current)
-        current += len(aggs)
-
+    offsets: Dict[Analyzer, int] = {}
     try:
-        result = frequencies.agg(*aggregations).collect()[0]
+        for a in bucket:
+            if isinstance(a, ScanShareableFrequencyBasedAnalyzer):
+                offsets[a] = len(aggregations)
+                aggregations.extend(a.aggregation_functions())
+    except Exception as exc:  # noqa: BLE001
+        # Parity AnalysisTest.scala:398-427: failure while building the
+        # fused second stage fails every analyzer sharing the GROUP BY;
+        # the Histograms do not share it and keep their table
+        for a in bucket:
+            ctx.metric_map[a] = a.to_failure_metric(exc)
+        bucket = []
+    if not bucket and not hists:
+        return ctx
+    # persist the (small, post-shuffle) table only when more than one job
+    # reads it: the fused pass, each other grouping analyzer, each
+    # Histogram, a saved state (parity :576-578, 626)
+    readers = (bool(bucket) + sum(a not in offsets for a in bucket)
+               + len(hists) + (save_states_with is not None))
+    cached = None
+    try:
+        table = _frequency_table(data, bucket, hists)
+        if readers > 1:
+            table = cached = table.persist(StorageLevel.MEMORY_AND_DISK)
+        if bucket:
+            view = (exclude_all_null_groups(table, bucket[0].grouping_columns)
+                    if hists else table)
+            result = view.agg(*aggregations).collect()[0]
     except Exception:  # noqa: BLE001
-        # isolate a poisoned expression (bad `where`/column) per analyzer
-        for a in analyzers:
-            try:
-                state = a.compute_state_from(data)
-                ctx.metric_map[a] = a.compute_metric_from_state(state)
-            except Exception as exc:  # noqa: BLE001
-                ctx.metric_map[a] = a.to_failure_metric(exc)
-        for h in hists:
-            try:
-                state = h.compute_state_from(data)
-                ctx.metric_map[h] = h.compute_metric_from_state(state)
-            except Exception as exc:  # noqa: BLE001
-                ctx.metric_map[h] = h.to_failure_metric(exc)
+        # the one fallback (e.g. bad `where`/column, parsed lazily)
         if cached is not None:
             cached.unpersist()
+        for a in bucket + hists:
+            ctx.metric_map[a] = _standalone_metric(data, a, save_states_with)
         return ctx
-    num_rows = int(result[0] or 0)
 
-    for a, offset in zip(shareable, offsets):
-        ctx.metric_map[a] = a.metric_from_aggregation_result(result, offset, num_rows)
-
-    state = FrequenciesAndNumRows(frequencies, num_rows)
-    if save_states_with is not None:
-        for a in analyzers:
-            save_states_with.persist(a, state)
-    for a in non_shareable:
+    if bucket:
+        num_rows = int(result[0] or 0)
+        state = FrequenciesAndNumRows(view, num_rows)
+        for a in bucket:
+            try:
+                if save_states_with is not None:
+                    save_states_with.persist(a, state)
+                ctx.metric_map[a] = (
+                    a.metric_from_aggregation_result(result, offsets[a],
+                                                     num_rows)
+                    if a in offsets else a.compute_metric_from_state(state))
+            except Exception as exc:  # noqa: BLE001
+                ctx.metric_map[a] = a.to_failure_metric(exc)
+    for h in hists:
         try:
-            ctx.metric_map[a] = a.compute_metric_from_state(state)
+            freqs = _histogram_view(table, h) if bucket else table
+            ctx.metric_map[h] = h.compute_metric_from_state(
+                FrequenciesAndNumRows(freqs))
         except Exception as exc:  # noqa: BLE001
-            ctx.metric_map[a] = a.to_failure_metric(exc)
-
-    _histogram_metrics()
+            ctx.metric_map[h] = h.to_failure_metric(exc)
 
     # keep_state_cache: the SAVED state keeps its materialized
     # frequency table — the caller (streaming merge) reads it once more
@@ -640,9 +563,12 @@ def run_on_aggregated_states(schema_source: DataFrame,
                 state = loader.load(a)
                 if state is not None:
                     merged = state if merged is None else merged.merge(state)
+            # the metric first: a provider that is also a loader may
+            # replace the very files the merged state still reads lazily
+            metric = a.compute_metric_from_state(merged)
             if save_states_with is not None and merged is not None:
                 save_states_with.persist(a, merged)
-            ctx.metric_map[a] = a.compute_metric_from_state(merged)
+            ctx.metric_map[a] = metric
         except Exception as exc:  # noqa: BLE001
             ctx.metric_map[a] = a.to_failure_metric(exc)
     return ctx

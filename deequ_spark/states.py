@@ -16,6 +16,8 @@ import dataclasses
 import hashlib
 import json
 import os
+import shutil
+import uuid
 from typing import Any, Dict, Optional
 
 from pyspark.sql import SparkSession
@@ -85,8 +87,7 @@ class FileSystemStateProvider(StateProvider):
         path — in particular chaining ``do_analysis_run(aggregate_with=
         provider, save_states_with=provider)`` on the SAME provider,
         which loads prior states then writes the merged ones back —
-        must pass ``allow_overwrite=True`` (or point
-        ``save_states_with`` at a distinct path)."""
+        must pass ``allow_overwrite=True``."""
         self.path = path
         self.spark = spark
         self.allow_overwrite = allow_overwrite
@@ -115,10 +116,23 @@ class FileSystemStateProvider(StateProvider):
                 f"State for {analyzer} already exists at {target}; pass "
                 "allow_overwrite=True to replace it")
         if isinstance(state, G.FrequenciesAndNumRows):
-            state.frequencies.write.mode("overwrite").parquet(target + ".freq.parquet")
+            # written beside the prior table and swapped in only once
+            # complete: ``state`` may be a merge that still reads the
+            # prior table lazily (aggregate_with and save_states_with on
+            # one provider), so it must outlive the write
+            path = target + ".freq.parquet"
+            staging = f"{path}.{uuid.uuid4().hex}"
+            num_rows = state.num_rows
+            try:
+                state.frequencies.write.parquet(staging)
+            except BaseException:
+                shutil.rmtree(staging, ignore_errors=True)
+                raise
+            shutil.rmtree(path, ignore_errors=True)
+            os.rename(staging, path)
             with open(target + ".json", "w") as f:
                 json.dump({"stateType": "FrequenciesAndNumRows",
-                           "numRows": state.num_rows}, f)
+                           "numRows": num_rows}, f)
             return
         from .analyzers.kll import KLLState
         if isinstance(state, KLLState):

@@ -270,6 +270,9 @@ class TestConcurrentGroups:
         seq = self._run(spark, df_numeric, 1)
         conc = self._run(spark, df_numeric, 3)
         assert list(seq.metric_map.keys()) == list(conc.metric_map.keys())
+        # canonical order: scan, KLL, buckets, standalones — here the
+        # order the analyzers were given
+        assert list(seq.metric_map.keys()) == self._analyzers()
         for a in seq.metric_map:
             ms, mc = seq.metric_map[a], conc.metric_map[a]
             assert ms.is_success and mc.is_success, (a, ms, mc)
@@ -321,52 +324,73 @@ class TestConcurrentGroups:
         assert len(jobs) >= 5, jobs
 
 
+def corpus_passes(spark, rows, schema, analyzers):
+    """Run ``analyzers`` sequentially over a frame whose partitions count
+    their reads; returns the context and the number of corpus passes."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(it):
+        acc.add(1)
+        return it
+    base = spark.createDataFrame(rows, schema)
+    n_parts = base.rdd.getNumPartitions()
+    counted = spark.createDataFrame(base.rdd.mapPartitions(tick), schema)
+    prev = spark.conf.get("spark.deequ.runner.maxConcurrentGroups", None)
+    spark.conf.set("spark.deequ.runner.maxConcurrentGroups", "1")
+    try:
+        ctx = do_analysis_run(counted, analyzers)
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.deequ.runner.maxConcurrentGroups")
+        else:
+            spark.conf.set("spark.deequ.runner.maxConcurrentGroups", prev)
+    assert acc.value % n_parts == 0
+    return ctx, acc.value // n_parts
+
+
+def assert_equals_calculate(df, ctx, analyzers):
+    """Every runner metric succeeds and equals the analyzer's own
+    ``calculate`` (histogram values, bin count and tail included)."""
+    for a in analyzers:
+        m, d = ctx.metric_map[a], a.calculate(df)
+        assert m.is_success and d.is_success, (a, m, d)
+        assert getattr(m.value, "values", m.value) == \
+            getattr(d.value, "values", d.value), (a, m.value, d.value)
+        if hasattr(m.value, "number_of_bins"):
+            assert m.value.number_of_bins == d.value.number_of_bins
+            assert m.value.tail_count == d.value.tail_count
+
+
 class TestHistogramShuffleShare:
-    """r13 (guide §2.4): a standalone Histogram sharing (column, where)
-    with a grouping bucket rides the bucket's shuffle — one corpus
-    groupBy (null-inclusive, persisted) serves the bucket's analyzers
-    (all-null group excluded post-shuffle) and the Histogram (string-
-    cast re-aggregation post-shuffle). Values, metric-map order and the
-    saved-state path must be byte-identical to the unshared run."""
-
-    KNOB = "spark.deequ.runner.shareHistogramShuffle"
-
-    def _run(self, spark, df, analyzers, share):
-        spark.conf.set(self.KNOB, "true" if share else "false")
-        try:
-            return do_analysis_run(df, analyzers)
-        finally:
-            spark.conf.unset(self.KNOB)
-
-    def _assert_identical(self, spark, df, analyzers):
-        shared = self._run(spark, df, analyzers, True)
-        plain = self._run(spark, df, analyzers, False)
-        assert list(shared.metric_map.keys()) == list(plain.metric_map.keys())
-        for a in analyzers:
-            ms, mp = shared.metric_map[a], plain.metric_map[a]
-            assert ms.is_success and mp.is_success, (a, ms, mp)
-            vs = getattr(ms.value, "values", ms.value)
-            vp = getattr(mp.value, "values", mp.value)
-            assert vs == vp, (a, ms.value, mp.value)
-            if hasattr(ms.value, "number_of_bins"):
-                assert ms.value.number_of_bins == mp.value.number_of_bins
-                assert ms.value.tail_count == mp.value.tail_count
+    """A plain Histogram on a grouping bucket's (column, where) reads the
+    bucket's frequency table — one corpus groupBy (null-inclusive,
+    persisted) serves the bucket's analyzers (all-null group excluded
+    post-shuffle) and the Histogram (string-cast re-aggregation
+    post-shuffle). Values equal each analyzer's own ``calculate``; the
+    metric map keeps the canonical order (buckets before standalones)."""
 
     def test_string_column_with_nulls_identical(self, spark, df_missing):
         """NULL rows: excluded from the bucket analyzers, a NullValue
         bin for the Histogram — both derived from ONE shuffle."""
         from deequ_spark import Histogram
-        self._assert_identical(spark, df_missing, [
-            Histogram("att1"), Entropy("att1"), Uniqueness(("att1",)),
-            Distinctness(("att1",)), CountDistinct(("att1",))])
+        analyzers = [Histogram("att1"), Entropy("att1"),
+                     Uniqueness(("att1",)), Distinctness(("att1",)),
+                     CountDistinct(("att1",))]
+        ctx = do_analysis_run(df_missing, analyzers)
+        assert_equals_calculate(df_missing, ctx, analyzers)
+        assert list(ctx.metric_map) == analyzers[1:] + analyzers[:1]
 
     def test_int_column_and_where_filter_identical(self, spark, df_numeric):
         from deequ_spark import Histogram
-        self._assert_identical(spark, df_numeric, [
-            Histogram("att2", where="att1 > 1"),
-            Entropy("att2", where="att1 > 1"),
-            # different where -> must NOT pair with the filtered bucket
-            Histogram("att2")])
+        analyzers = [Histogram("att2", where="att1 > 1"),
+                     Entropy("att2", where="att1 > 1"),
+                     # different where -> must NOT pair with the filtered
+                     # bucket
+                     Histogram("att2")]
+        ctx = do_analysis_run(df_numeric, analyzers)
+        assert_equals_calculate(df_numeric, ctx, analyzers)
+        assert list(ctx.metric_map) == [analyzers[1], analyzers[0],
+                                        analyzers[2]]
 
     def test_double_column_never_shares(self, spark):
         """float/double are excluded from sharing: groupBy normalizes
@@ -376,75 +400,63 @@ class TestHistogramShuffleShare:
         from deequ_spark import Histogram
         df = spark.createDataFrame(
             [(1, -0.0), (2, 0.0), (3, 1.5)], "id int, v double")
-        shared = self._run(spark, df, [Histogram("v"), Entropy("v")], True)
-        plain = self._run(spark, df, [Histogram("v"), Entropy("v")], False)
-        hist_s = [m for a, m in shared.metric_map.items()
-                  if a.name == "Histogram"][0]
-        hist_p = [m for a, m in plain.metric_map.items()
-                  if a.name == "Histogram"][0]
-        assert hist_s.value.values == hist_p.value.values
-        assert "-0.0" in hist_s.value.values      # corpus-level cast kept
+        analyzers = [Histogram("v"), Entropy("v")]
+        ctx = do_analysis_run(df, analyzers)
+        assert_equals_calculate(df, ctx, analyzers)
+        assert "-0.0" in ctx.metric_map[analyzers[0]].value.values
 
     def test_shared_run_scans_the_corpus_fewer_times(self, spark):
-        """Structural pin: with sharing the whole [Histogram, Entropy]
-        run reads the base data ONCE (persisted inclusive table);
-        without it the bucket scans once and the histogram's two lazy
-        post-state jobs scan twice more."""
+        """Structural pin: the whole [Histogram, Entropy] run reads the
+        base data ONCE (persisted inclusive table)."""
         from deequ_spark import Histogram
-        schema = "item string, att1 string"
         rows = [(str(i), "abc"[i % 3]) for i in range(30)]
+        ctx, passes = corpus_passes(spark, rows, "item string, att1 string",
+                                    [Histogram("att1"), Entropy("att1")])
+        assert all(m.is_success for m in ctx.metric_map.values())
+        assert passes == 1, passes
 
-        def passes(share):
-            acc = spark.sparkContext.accumulator(0)
+    def test_table_failure_falls_back_per_consumer(self, spark, df_missing,
+                                                   monkeypatch):
+        """The one fallback: when the shared table cannot be built, the
+        bucket analyzers and the Histogram each recompute on their own —
+        Success metrics equal to ``calculate``, not Failure metrics."""
+        from deequ_spark import Histogram
+        from deequ_spark.runners import analysis_runner
 
-            def tick(it):
-                acc.add(1)
-                return it
-            base = spark.createDataFrame(rows, schema)
-            n_parts = base.rdd.getNumPartitions()
-            counted = spark.createDataFrame(
-                base.rdd.mapPartitions(tick), schema)
-            prev = spark.conf.get("spark.deequ.runner.maxConcurrentGroups",
-                                  None)
-            spark.conf.set("spark.deequ.runner.maxConcurrentGroups", "1")
-            try:
-                ctx = self._run(spark, counted,
-                                [Histogram("att1"), Entropy("att1")], share)
-            finally:
-                if prev is None:
-                    spark.conf.unset("spark.deequ.runner.maxConcurrentGroups")
-                else:
-                    spark.conf.set("spark.deequ.runner.maxConcurrentGroups",
-                                   prev)
-            assert all(m.is_success for m in ctx.metric_map.values())
-            assert acc.value % n_parts == 0
-            return acc.value // n_parts
-
-        shared_passes = passes(True)
-        plain_passes = passes(False)
-        assert shared_passes == 1, shared_passes
-        assert plain_passes >= 2, plain_passes
+        def broken(*args, **kwargs):
+            raise RuntimeError("shared table unavailable")
+        monkeypatch.setattr(analysis_runner, "_frequency_table", broken)
+        analyzers = [Histogram("att1"), Entropy("att1"),
+                     Uniqueness(("att1",))]
+        ctx = do_analysis_run(df_missing, analyzers)
+        assert_equals_calculate(df_missing, ctx, analyzers)
 
 
 def test_standalone_histogram_single_corpus_pass(spark):
-    """r13: a standalone Histogram's metric needs two jobs over its
-    frequency table (stats agg + top-N collect); the lazy state plan
-    used to re-run the corpus groupBy in BOTH. The table is now
-    persisted across the two jobs — exactly one corpus pass."""
+    """A standalone Histogram's metric needs two jobs over its frequency
+    table (stats agg + top-N collect); the table is persisted across the
+    two jobs — exactly one corpus pass."""
     from deequ_spark import Histogram
-    schema = "item string, att1 string"
     rows = [(str(i), "abc"[i % 3]) for i in range(30)]
-    acc = spark.sparkContext.accumulator(0)
-
-    def tick(it):
-        acc.add(1)
-        return it
-    base = spark.createDataFrame(rows, schema)
-    n_parts = base.rdd.getNumPartitions()
-    counted = spark.createDataFrame(base.rdd.mapPartitions(tick), schema)
-    ctx = do_analysis_run(counted, [Histogram("att1")])
+    ctx, passes = corpus_passes(spark, rows, "item string, att1 string",
+                                [Histogram("att1")])
     m = next(iter(ctx.metric_map.values()))
     assert m.is_success
     assert m.value.values["a"].absolute == 10
-    assert acc.value == n_parts, \
-        f"expected 1 corpus pass, saw {acc.value / n_parts}"
+    assert passes == 1, f"expected 1 corpus pass, saw {passes}"
+
+
+@pytest.mark.parametrize("dtype,values", [("string", ["a", "b", "c"]),
+                                          ("double", [-0.0, 0.0, 1.5])])
+def test_same_column_histograms_single_corpus_pass(spark, dtype, values):
+    """Two plain Histograms on one (column, where) and no grouping
+    bucket read ONE frequency table — the Histograms' own string-cast
+    table, so a float/double column shares it too: one corpus pass."""
+    from deequ_spark import Histogram
+    schema = f"item string, att1 {dtype}"
+    rows = [(str(i), values[i % 3]) for i in range(30)]
+    analyzers = [Histogram("att1"), Histogram("att1", max_detail_bins=2)]
+    ctx, passes = corpus_passes(spark, rows, schema, analyzers)
+    assert passes == 1, f"expected 1 corpus pass, saw {passes}"
+    assert_equals_calculate(spark.createDataFrame(rows, schema), ctx,
+                            analyzers)

@@ -1288,7 +1288,8 @@ class TestAdviceR6Fixes:
                                                           spark):
         """ADVICE r6 #3: chaining aggregate_with + save_states_with on
         ONE FileSystemStateProvider needs allow_overwrite=True; the
-        default refuses the second persist (HdfsStateProvider parity)."""
+        default refuses the second persist (HdfsStateProvider parity).
+        With it, chained metrics equal one run over the union."""
         d1 = spark.createDataFrame([(1,), (2,)], "v int")
         d2 = spark.createDataFrame([(3,), (4,), (5,)], "v int")
         strict = FileSystemStateProvider(str(tmp_path / "strict"),
@@ -1299,19 +1300,27 @@ class TestAdviceR6Fixes:
         (metric,) = ctx.metric_map.values()
         assert not metric.is_success
         assert isinstance(metric.error, FileExistsError)
+        # frequency states too: a merged state still reads the prior
+        # state's files lazily while the provider replaces them
+        from deequ_spark import Histogram
+        analyzers = [Size(), Histogram("v"), Uniqueness(("v",))]
         prov = FileSystemStateProvider(str(tmp_path / "chain"), spark=spark,
                                        allow_overwrite=True)
-        do_analysis_run(d1, [Size()], save_states_with=prov)
-        ctx = do_analysis_run(d2, [Size()], aggregate_with=prov,
-                              save_states_with=prov)
-        (metric,) = ctx.metric_map.values()
-        assert metric.value == 5.0
-        # chained once more: states on disk are now the merged ones
-        d3 = spark.createDataFrame([(6,)], "v int")
-        ctx = do_analysis_run(d3, [Size()], aggregate_with=prov,
-                              save_states_with=prov)
-        (metric,) = ctx.metric_map.values()
-        assert metric.value == 6.0
+        do_analysis_run(d1, analyzers, save_states_with=prov)
+        seen = d1
+        # chained twice: from the second delta on, the states on disk
+        # are the merged ones
+        for delta in (d2, d2.selectExpr("v + 3 AS v"),
+                      spark.createDataFrame([(1,)], "v int")):
+            ctx = do_analysis_run(delta, analyzers, aggregate_with=prov,
+                                  save_states_with=prov)
+            seen = seen.unionByName(delta)
+            union = do_analysis_run(seen, analyzers)
+            for a in analyzers:
+                m, want = ctx.metric_map[a], union.metric_map[a]
+                assert m.is_success, (a, m.error)
+                assert m.value == want.value, (a, m.value, want.value)
+        assert ctx.metric_map[Size()].value == 9.0
 
     def test_anomaly_history_non_numeric_becomes_missing(self, spark):
         """ADVICE r6 #4: a successful non-numeric historic metric (e.g. a
